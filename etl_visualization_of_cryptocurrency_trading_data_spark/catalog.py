@@ -141,7 +141,12 @@ def create_crypto_database(
     persisted for the duration of the writes — each ``saveAsTable`` is
     an executor-side parquet write reading the cached price rows, not a
     re-execution of the events scan + window pass. Facts are
-    partitioned by exchange (the reference's partition-key prefix).
+    partitioned by exchange (the reference's partition-key prefix) and
+    rebalanced on it first, so each exchange partition is one file, not
+    one per writing task: a serving read opens fewer files and runs
+    fewer scan tasks. AQE's rebalance still splits a partition that
+    grows past the advisory size, so a hot exchange is written by
+    several tasks at scale.
     """
     from .operators import derive
     from .operators.indicators import technical_indicators
@@ -159,9 +164,10 @@ def create_crypto_database(
             "coin_market_cap": (derive.coin_market_cap(price), ()),
         }
         for name, (df, parts) in tables.items():
-            writer = df.write.mode("overwrite")
             if parts:
-                writer = writer.partitionBy(*parts)
-            writer.saveAsTable(f"{database}.{name}")
+                writer = df.hint("rebalance", *parts).write.partitionBy(*parts)
+            else:
+                writer = df.write
+            writer.mode("overwrite").saveAsTable(f"{database}.{name}")
     finally:
         price.unpersist()

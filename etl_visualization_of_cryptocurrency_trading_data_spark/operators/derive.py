@@ -277,7 +277,8 @@ def coin_market_cap(price: DataFrame) -> DataFrame:
     dags/crypto_data_streaming.py:125-141 — here computed in-engine, A6).
 
     market_cap_percentage = 100 * sum(volume per symbol) / sum(volume),
-    stamped with the global max timestamp. Two tiny aggregates + a
+    stamped with the global max timestamp; NULL when the volumes sum to
+    0 (as DuckDB's ``x / 0.0``). Two tiny aggregates + a
     broadcast of the single-row total — deliberately NOT a
     ``sum().over(Window.partitionBy(lit(1)))``, which would funnel all
     rows through one partition at scale.
@@ -295,9 +296,9 @@ def coin_market_cap(price: DataFrame) -> DataFrame:
         .select(
             "coin_symbol",
             F.col("snapshot_ts").alias("timestamp"),
-            (F.lit(100.0) * F.col("symbol_volume") / F.col("total_volume")).alias(
-                "market_cap_percentage"
-            ),
+            F.try_divide(
+                F.lit(100.0) * F.col("symbol_volume"), F.col("total_volume")
+            ).alias("market_cap_percentage"),
         )
     )
 

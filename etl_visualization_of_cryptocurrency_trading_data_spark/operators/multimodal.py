@@ -3132,9 +3132,12 @@ def multimodal_dedup_report(
     monotone per modality, so the component MINIMUM of an encoded
     graph is the encoding of the per-modality minimum and the decode
     ``shiftright(label, 2)`` recovers exactly the per-modality
-    cluster_id the separate runs produced), and the per-modality
-    stats/fingerprint aggregates become two tag-keyed groupBys + one
-    5-row join instead of eight aggregates + four cross joins.
+    cluster_id the separate runs produced; the tag is the floor modulus
+    ``pmod(label, 4)``, so negative doc ids decode too, and a doc id
+    whose encoding would overflow a long fails the query), and the
+    per-modality stats/fingerprint aggregates become two tag-keyed
+    groupBys + one 5-row join instead of eight aggregates + four cross
+    joins.
     """
     from .dedup import _simhash_bands_md5, connected_components_star
 
@@ -3144,18 +3147,27 @@ def multimodal_dedup_report(
         ("audio", afp_wav(audio), audio_max_hamming),
         ("video", vfp_gif(video), video_max_hamming),
     ]
+
+    def tag(rep_id: str, i: int):
+        # rep_id * 4 + i must not overflow a long: -2^61 <= rep_id < 2^61
+        return (
+            F.when(
+                F.col(rep_id).between(-(1 << 61), (1 << 61) - 1),
+                F.shiftleft(F.col(rep_id), 2) + F.lit(i),
+            )
+            .otherwise(
+                F.raise_error(F.lit("multimodal_dedup_report: doc_id outside [-2^61, 2^61)"))
+            )
+            .alias(rep_id)
+        )
+
     fps_l, reps_l, pairs_l = [], [], []
     for i, (_name, fps, max_hamming) in enumerate(fams):
         fps = fps.persist()
         reps, pairs = _phash_rep_pairs(fps, max_hamming)
         fps_l.append(fps)
         reps_l.append(reps.persist())
-        pairs_l.append(
-            pairs.select(
-                (F.shiftleft(F.col("rep_id_a"), 2) + F.lit(i)).alias("rep_id_a"),
-                (F.shiftleft(F.col("rep_id_b"), 2) + F.lit(i)).alias("rep_id_b"),
-            )
-        )
+        pairs_l.append(pairs.select(tag("rep_id_a", i), tag("rep_id_b", i)))
     union_pairs = pairs_l[0]
     for p in pairs_l[1:]:
         union_pairs = union_pairs.unionByName(p)
@@ -3164,7 +3176,7 @@ def multimodal_dedup_report(
     ).persist()
     labeled = None
     for i, (name, _fps, _h) in enumerate(fams):
-        lab_i = lab_all.filter(F.col("doc_id") % 4 == i).select(
+        lab_i = lab_all.filter(F.pmod("doc_id", F.lit(4)) == i).select(
             F.shiftright(F.col("doc_id"), 2).alias("doc_id"),
             F.shiftright(F.col("cluster_id"), 2).alias("cluster_id"),
         )

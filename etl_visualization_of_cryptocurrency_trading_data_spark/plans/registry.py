@@ -1096,13 +1096,13 @@ SELECT * FROM (VALUES
        aqe_shuffle_reads)""",
     "plan_audit": """
 SELECT * FROM (VALUES
-  ('coin_table', 6, 3, 3, 0, 6),
+  ('coin_table', 4, 1, 1, 0, 0),
   ('exact_dedup', 1, 0, 0, 0, 0),
   ('technical_indicators', 1, 0, 0, 0, 0),
   ('coin_market_cap', 3, 1, 1, 0, 0),
   ('gopher_rules', 0, 0, 0, 0, 0),
   ('media_metadata', 0, 0, 0, 0, 0),
-  ('price_chart', 1, 1, 1, 0, 0),
+  ('price_chart', 1, 0, 0, 0, 0),
   ('url_dedup', 2, 0, 0, 0, 0)
 ) AS t(query, n_shuffles, n_broadcasts, n_broadcast_joins,
        n_sortmerge_joins, n_window_group_limits)""",

@@ -9,28 +9,36 @@ predicate pushdown / column pruning / broadcast joins all apply
 
 Time-range filters are anchored at the data's max timestamp rather than
 wall-clock now() so results are deterministic (the reference anchors at
-datetime.now(), flask/app.py:39,93); the anchor is computed as a 1-row
-aggregate broadcast back into the filter — one declarative plan, no
-driver round-trip, no two-query race (reference defect SURVEY §2.11.5).
+datetime.now(), flask/app.py:39,93); the anchor is a window max over the
+symbol's rows, compared in the same pass — one declarative plan, one
+scan, no driver round-trip, no two-query race (reference defect SURVEY
+§2.11.5).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from functools import reduce
 
-from ..operators.latest import latest_per_group
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 
 # Reference time-range lookup {"1h": 1, "1d": 24, ...} (flask/app.py:30-38).
 TIME_RANGE_HOURS = {"1h": 1, "1d": 24, "1w": 24 * 7, "1m": 24 * 30, "1y": 24 * 365}
 
 
 def _within_range(df: DataFrame, time_range: str, ts_col: str = "timestamp") -> DataFrame:
-    """timestamp > max(timestamp) - range  (P6, anchored deterministically)."""
+    """timestamp > max(timestamp) - range  (P6, anchored deterministically).
+
+    The anchor is ``max`` over an unpartitioned window, so the rows are
+    scanned once and meet their anchor in the same pass (a 1-row
+    aggregate joined back would scan them twice). The window moves every
+    input row to one partition: the routes apply it to one symbol's rows,
+    of which they collect a subset anyway.
+    """
     hours = TIME_RANGE_HOURS[time_range]
-    anchor = df.agg(F.max(ts_col).alias("_anchor"))
+    anchor = F.max(ts_col).over(Window.partitionBy())
     return (
-        df.join(F.broadcast(anchor))
+        df.withColumn("_anchor", anchor)
         .filter(F.col(ts_col) > F.col("_anchor") - F.expr(f"INTERVAL {hours} HOURS"))
         .drop("_anchor")
     )
@@ -87,39 +95,42 @@ def coin_table(
     """Flagship: the full coin snapshot table (flask/app.py:270-302).
 
     The reference joins three full fact tables many-to-many in pandas and
-    then collapses to the newest row (J1/J2/A2, defect §2.11.7). We
-    pre-collapse each fact side to its latest row per (coin_id, exchange)
-    — same user-observable result, but the join inputs shrink to
-    dimension size *before* the join, so every join is a broadcast hash
-    join and the many-to-many blow-up never materializes. At 100 TB the
-    latest-per-group collapse is the only shuffle (one per fact table).
+    then collapses to the newest row (J1/J2/A2, defect §2.11.7). Here each
+    fact side is projected to (coin_id, exchange, struct(timestamp,
+    measures...)), the three are unioned, and ONE groupBy on (coin_id,
+    exchange) takes the ``max`` struct of each side: the newest row, ties
+    broken by the measures in order (descending, NULL lowest, NaN
+    highest) — the same pick as ``row_number()`` over ``timestamp DESC,
+    measures DESC NULLS LAST``. Every output column is in the struct, so
+    ties on the whole struct cannot change the result. A key missing
+    from any side keeps a NULL struct and is dropped (inner-join
+    semantics). The dimension-sized result is broadcast into ``coins``:
+    one shuffle in total, and the many-to-many blow-up never
+    materializes.
     """
-    # Tiebreaks over the projected measures: if two rows share the max
-    # timestamp, the pick is pinned (and identical in the oracle SQL) —
-    # fixtures have no such ties today, but real feeds will.
-    lp = latest_per_group(
-        price, ["coin_id", "exchange"], tiebreak=["price", "volume"]
-    ).select(
-        F.col("coin_id").alias("id"), "exchange",
-        F.col("timestamp").alias("price_ts"), "price", "volume",
+    keys = ["coin_id", "exchange"]
+    sides = {
+        "_p": (price, ["price", "volume"]),
+        "_o": (ohlc, ["open", "high", "low", "close"]),
+        "_i": (indicators, ["sma_20", "ema_20", "rsi_14", "macd"]),
+    }
+    parts = [
+        df.select(*keys, F.struct("timestamp", *measures).alias(tag))
+        for tag, (df, measures) in sides.items()
+    ]
+    facts = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    latest = (
+        facts.groupBy(*keys)
+        .agg(*[F.max(tag).alias(tag) for tag in sides])
+        .filter(F.col("_p").isNotNull() & F.col("_o").isNotNull() & F.col("_i").isNotNull())
+        .select(
+            F.col("coin_id").alias("id"), "exchange",
+            F.col("_p.timestamp").alias("price_ts"), "_p.price", "_p.volume",
+            "_o.open", "_o.high", "_o.low", "_o.close",
+            "_i.sma_20", "_i.ema_20", "_i.rsi_14", "_i.macd",
+        )
     )
-    lo = latest_per_group(
-        ohlc, ["coin_id", "exchange"], tiebreak=["open", "high", "low", "close"]
-    ).select(
-        F.col("coin_id").alias("id"), "exchange", "open", "high", "low", "close"
-    )
-    li = latest_per_group(
-        indicators,
-        ["coin_id", "exchange"],
-        tiebreak=["sma_20", "ema_20", "rsi_14", "macd"],
-    ).select(
-        F.col("coin_id").alias("id"), "exchange", "sma_20", "ema_20", "rsi_14", "macd"
-    )
-    keys = ["id", "exchange"]
-    joined = (
-        coins.join(lp, keys, "inner").join(lo, keys, "inner").join(li, keys, "inner")
-    )
-    return joined.select(
+    return coins.join(F.broadcast(latest), ["id", "exchange"]).select(
         "id", "name", "symbol", "exchange", "price_ts", "price", "volume",
         "open", "high", "low", "close", "sma_20", "ema_20", "rsi_14", "macd",
     )

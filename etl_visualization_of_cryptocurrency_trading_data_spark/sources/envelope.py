@@ -81,9 +81,10 @@ def build_envelopes(events: DataFrame) -> DataFrame:
     """(tick_ts, value) — one JSON envelope string per 5-minute tick.
 
     Per tick: the coin dims seen, the raw price ticks, the tick's own
-    OHLC candle per coin, and volume share-of-total per symbol — the
-    in-engine equivalents of the reference's four REST-fed record
-    lists (dags/crypto_data_streaming.py:73-141).
+    OHLC candle per coin, and volume share-of-total per symbol (NULL
+    for a tick whose volumes sum to 0) — the in-engine equivalents of
+    the reference's four REST-fed record lists
+    (dags/crypto_data_streaming.py:73-141).
     """
     base = events.select(
         F.window("ts", TICK).start.alias("tick_ts"),
@@ -138,9 +139,9 @@ def build_envelopes(events: DataFrame) -> DataFrame:
             lambda p: F.struct(
                 p["symbol"].alias("coin_symbol"),
                 F.date_format("tick_ts", ISO).alias("timestamp"),
-                (F.lit(100.0) * p["symbol_volume"] / F.col("total_volume")).alias(
-                    "market_cap_percentage"
-                ),
+                F.try_divide(
+                    F.lit(100.0) * p["symbol_volume"], F.col("total_volume")
+                ).alias("market_cap_percentage"),
             ),
         ).alias("coin_market_cap"),
     )

@@ -18,7 +18,7 @@ from etl_visualization_of_cryptocurrency_trading_data_spark.plans.registry impor
 from etl_visualization_of_cryptocurrency_trading_data_spark.session import get_spark
 
 SHOWCASE = [
-    "coin_table",            # 3x broadcast join + WindowGroupLimit top-1
+    "coin_table",            # union + one max(struct) groupBy + broadcast join
     "ohlc_candles",          # partial struct-min/max aggregation, one shuffle
     "technical_indicators",  # single repartition+sort + fused mapInPandas
     "minhash_lsh_pairs",     # codegen'd 64-min aggregate + bucket self-join

@@ -3217,3 +3217,35 @@ def test_multimodal_dedup_report_matches_per_modality_recount(spark):
         assert got[name] == want, (name, got[name], want)
         assert want[3] > 0, f"{name} fixture slice has no dup cluster"
     spark.catalog.clearCache()
+
+
+def test_multimodal_dedup_report_negative_doc_ids(spark):
+    """Shifting every doc_id below zero renumbers documents without
+    changing which are duplicates, so the report must not change. The
+    report tags rep ids as ``rep_id * 4 + modality`` for one shared CC
+    run; the decode has to take the tag with a floor modulus, or the
+    negative tags of image/audio/video never match their modality."""
+    from etl_visualization_of_cryptocurrency_trading_data_spark.operators import multimodal
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    media = [
+        multimodal.ppm_table(docs),
+        multimodal.wav_table(docs),
+        multimodal.gif_table_animated(docs),
+    ]
+    shift = 1 << 40
+
+    def report(frames):
+        return sorted(tuple(r) for r in multimodal.multimodal_dedup_report(*frames).collect())
+
+    want = report([docs, *media])
+    shifted = [f.withColumn("doc_id", F.col("doc_id") - shift) for f in (docs, *media)]
+    assert shifted[0].agg(F.max("doc_id")).first()[0] < 0
+    got = report(shifted)
+    assert {r[0] for r in want} == {"text", "image", "audio", "video"}
+    assert got == want
+    # past 2^61 the tag encoding would overflow: the query fails loudly
+    too_big = [f.withColumn("doc_id", F.col("doc_id") + (1 << 61)) for f in (docs, *media)]
+    with pytest.raises(Exception, match=r"doc_id outside"):
+        report(too_big)
+    spark.catalog.clearCache()

@@ -4,6 +4,8 @@ paths show the pushdown/pruning the 100 TB design depends on."""
 
 from __future__ import annotations
 
+import duckdb
+import pandas as pd
 from pyspark.sql import functions as F
 
 from etl_visualization_of_cryptocurrency_trading_data_spark import sinks
@@ -14,6 +16,7 @@ from etl_visualization_of_cryptocurrency_trading_data_spark.catalog import (
 from etl_visualization_of_cryptocurrency_trading_data_spark.operators import derive
 
 from conftest import SF_SMOKE
+from test_oracle_parity import assert_frames_match
 
 
 def test_flagship_expressible_in_sql(spark):
@@ -100,6 +103,59 @@ def test_envelope_decode_tolerates_malformed_lines(spark):
     decoded = env.decode_envelopes(mixed)
     assert env.decode_price(decoded).count() == n_good_price
     assert decoded.count() == mixed.count()  # rows survive as nulls, not errors
+
+
+def _zero_volume_events(spark):
+    """Two 5-minute ticks: every event of the first is priced 0 (so its
+    volumes sum to 0), the second has ordinary prices."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0)
+    rows = [
+        (1, t0 + dt.timedelta(minutes=1), 1, "view", 0.0),
+        (2, t0 + dt.timedelta(minutes=2), 2, "view", 0.0),
+        (3, t0 + dt.timedelta(minutes=3), 1, "click", 0.0),
+        (4, t0 + dt.timedelta(minutes=6), 1, "view", 2.0),
+        (5, t0 + dt.timedelta(minutes=7), 2, "click", 6.0),
+    ]
+    pdf = pd.DataFrame(rows, columns=["event_id", "ts", "user_id", "event_type", "value"])
+    return spark.createDataFrame(pdf), pdf
+
+
+def test_envelope_market_cap_share_is_null_for_zero_volume_tick(spark):
+    """A tick whose volumes sum to 0 has no defined share: the envelope
+    carries NULL for it, as the DuckDB oracle does (x / 0.0 is NULL
+    there), instead of failing the whole build on DIVIDE_BY_ZERO."""
+    from etl_visualization_of_cryptocurrency_trading_data_spark.plans.oracles.serving import (
+        ENVELOPE_MCAP_SQL,
+    )
+    from etl_visualization_of_cryptocurrency_trading_data_spark.sources import envelope as env
+
+    events, pdf = _zero_volume_events(spark)
+    got = env.decode_market_cap(env.decode_envelopes(env.build_envelopes(events))).toPandas()
+    con = duckdb.connect()
+    con.register("events", pdf)
+    want = con.sql(ENVELOPE_MCAP_SQL).df()
+    assert_frames_match(got, want, "envelope_mcap")
+    assert got["market_cap_percentage"].isna().sum() == 2  # C1, C2 of the zero tick
+    assert got["market_cap_percentage"].notna().sum() == 2
+
+
+def test_coin_market_cap_share_is_null_when_total_volume_is_zero(spark):
+    """All-zero volumes: every share is NULL (DuckDB's x / 0.0), not a
+    DIVIDE_BY_ZERO failure."""
+    from etl_visualization_of_cryptocurrency_trading_data_spark.plans.oracles.serving import (
+        ORACLE_SQL,
+    )
+
+    events, pdf = _zero_volume_events(spark)
+    events = events.filter(F.col("value") == 0)
+    got = derive.coin_market_cap(derive.price_data(events)).toPandas()
+    con = duckdb.connect()
+    con.register("events", pdf[pdf["value"] == 0])
+    want = con.sql(ORACLE_SQL["coin_market_cap"]).df()
+    assert_frames_match(got, want, "coin_market_cap")
+    assert len(got) == 2 and got["market_cap_percentage"].isna().all()
 
 
 def test_partition_pruning_on_written_table(spark, tmp_path):
@@ -535,10 +591,11 @@ def test_no_driver_side_materialization_in_operator_paths():
 
 
 def test_plan_audit_pins_flagship_join_strategy(spark):
-    """The flagship coin_table plan must stay three BROADCAST hash
-    joins over WindowGroupLimit latest-per-group collapses — zero
-    sort-merge joins. plan_audit makes this driver-visible; this test
-    makes it fail locally first."""
+    """The flagship coin_table plan must stay one groupBy over the
+    unioned fact sides (its only shuffle beyond the derived inputs'
+    own) joined to coins by ONE broadcast hash join — zero sort-merge
+    joins, no per-side latest-row windows. plan_audit makes this
+    driver-visible; this test makes it fail locally first."""
     from etl_visualization_of_cryptocurrency_trading_data_spark.plans.audit import (
         plan_features,
     )
@@ -548,11 +605,11 @@ def test_plan_audit_pins_flagship_join_strategy(spark):
 
     f = plan_features(QUERIES["coin_table"](spark, SF_SMOKE))
     assert f == {
-        "n_shuffles": 6,
-        "n_broadcasts": 3,
-        "n_broadcast_joins": 3,
+        "n_shuffles": 4,
+        "n_broadcasts": 1,
+        "n_broadcast_joins": 1,
         "n_sortmerge_joins": 0,
-        "n_window_group_limits": 6,
+        "n_window_group_limits": 0,
     }
 
 
