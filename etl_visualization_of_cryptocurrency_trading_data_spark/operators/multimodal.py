@@ -2419,20 +2419,12 @@ def dhash_ppm(
 
 def _passthrough_cols(passthrough: str) -> list[str]:
     """Column names of a ``passthrough`` schema fragment
-    ("width int, height int" -> ["width", "height"]).
+    ("width int, height int" -> ["width", "height"]), parsed as DDL so
+    commas inside a type ("decimal(10,2)", "map<int,int>") never split
+    a column."""
+    from pyspark.sql.types import _parse_datatype_string
 
-    The fragment is split on commas, so comma-bearing complex types
-    ("m map<int,int>") would mis-parse into phantom columns and fail
-    later with an opaque Arrow/schema error — raise here instead with
-    the real reason (ADVICE r14). Every current passthrough is flat
-    ints; a future complex column should extend this to a proper
-    DDL parse (pyspark.sql.types._parse_datatype_string)."""
-    if "<" in passthrough:
-        raise ValueError(
-            "passthrough schema fragments must use flat types (complex "
-            f"types would mis-split on commas): {passthrough!r}"
-        )
-    return [c.split()[0] for c in passthrough.split(",") if c.strip()]
+    return _parse_datatype_string(f"struct<{passthrough}>").names
 
 
 def perceptual_dup_clusters(

@@ -28,6 +28,13 @@ foreachBatch fan-out adds zero extra source reads.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+import time
+from collections.abc import Callable
+from datetime import timedelta
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -399,313 +406,242 @@ def run_ingest(
     return writer.start()
 
 
-def vwap_stream_replay(
-    spark: SparkSession, price: DataFrame, timeout_s: int = 600
+# Replays: each *_stream_replay drains one streaming operator over a
+# finite feed and returns what it emitted, so batch === stream is
+# checkable against the batch twin and the DuckDB oracle.
+
+_SENTINEL = "__sentinel__"
+_NOT_SENTINEL = f"coin_id != '{_SENTINEL}'"
+_OHLC_SCHEMA = (
+    "coin_id string, exchange string, timestamp timestamp,"
+    " open double, high double, low double, close double"
+)
+_SPREAD_SCHEMA = (
+    "symbol string, ts_a timestamp, price_a double,"
+    " ts_b timestamp, price_b double, spread double"
+)
+
+
+def _replay(
+    spark: SparkSession,
+    name: str,
+    waves: list[list[DataFrame]],
+    stream: Callable[[str], DataFrame],
+    out_schema: str,
+    timeout_s: int,
+    *,
+    keep: str | None = None,
+    per_batch: Callable[[DataFrame, int, str], DataFrame] | None = None,
+    feed_bytes: int | None = None,
+    pin_partitions: bool = True,
+    available_now: bool = True,
 ) -> DataFrame:
-    """Deterministic end-to-end replay of [[vwap_stream]], returned as a
-    plain batch DataFrame so the STREAMING path earns a driver-side
-    oracle-hash row (the pytest suite pins batch===stream bit-exactness;
-    this makes the same evidence driver-checkable).
+    """Run one stream replay and return its output as a materialized
+    batch frame. A builder supplies its spool ``waves``, its ``stream``
+    (spool dir -> streaming frame), its ``out_schema`` and the ``keep``
+    filter for sentinel rows; one try/finally owns the rest:
 
-    Mechanics: the price feed is spooled to a temp dir as parquet, plus
-    one far-future sentinel tick (+72 h) in a second file; a file-stream
-    → watermarked tumbling VWAP (delay=0) runs to completion under
-    ``availableNow``, emitting into a memory sink. The sentinel pushes
-    the final watermark past every REAL window, so append mode emits
-    exactly the batch VWAP of the real feed — the sentinel's own
-    still-open window is the only one withheld, and its rows are
-    excluded by key. Oracle = the same SQL as ``vwap_hourly``.
+    - a temp root ``<name>_replay_*`` (spool, sink, checkpoint), deleted
+      on every exit path, failed query and timeout included;
+    - the spool: each wave's frames are written in order as
+      ``NNNN.parquet`` with increasing mtimes (the file source schedules
+      oldest first, so ``maxFilesPerTrigger=1`` drains them in order);
+      wave k+1 lands only after drain k ends, and its drain restarts the
+      query from the same checkpoint;
+    - the conf pin, restored on exit: ``spark.sql.shuffle.partitions``
+      fixes the state partition count at the first start (restarts reuse
+      it) and AQE never touches streaming plans, so it is one partition
+      per 64 MB of feed (``feed_bytes``, else the first wave's on-disk
+      size) capped at the session value — the batch-sized default ran
+      one task per state store on every micro-batch of a few-MB feed.
+      ``spark.sql.streaming.minBatchesToRetain`` is 2: the checkpoint is
+      thrown away, so there is nothing to recover. The pin is
+      session-global, so no other streaming query may be active;
+    - the drain: ``availableNow`` bounded by ``timeout_s``. Python data
+      sources have no ``availableNow`` (Spark runs one batch, which emits
+      nothing in append mode), so ``available_now=False`` runs a fast
+      processing-time trigger until ``processAllAvailable`` returns,
+      which includes the no-data batch that commits the last watermark;
+    - the parquet sink: the file sink, or with ``per_batch`` the frame
+      ``per_batch(batch, epoch_id, out)`` returns through
+      ``sinks.write_table``'s epoch-partitioned overwrite (``out`` holds
+      the earlier epochs). Read back and localCheckpointed before the
+      root goes.
 
-    NOTE the streaming job runs at BUILD time (a stream cannot be
-    packaged as a lazy batch plan); a bench timing of the returned
-    frame measures only the memory-sink scan. Empty input short-
-    circuits to an empty frame (no stream to run, nothing to emit).
+    The stream runs when the builder is called (it cannot be a lazy
+    batch plan); timing the returned frame measures only its scan.
     """
-    import os
-    import tempfile
-    import uuid
-    from datetime import timedelta
-
-    out_schema = (
-        "coin_id string, exchange string, timestamp timestamp,"
-        " vwap double, total_volume double, n_ticks bigint"
-    )
-    real = price.select("coin_id", "exchange", "timestamp", "price", "volume")
-    # one materialization feeds the bounds aggregate AND the spool write
-    # (OPTIMIZATION_r15, guide §2.4 — each consumer otherwise re-derives
-    # the tick feed; ABAB at sf0.1: vwap median 4.4 -> 4.1 s)
-    real = real.localCheckpoint(eager=True)
-    max_ts = real.agg(F.max("timestamp")).collect()[0][0]
-    if max_ts is None:
-        return spark.createDataFrame([], out_schema)
-    spool = _spool_with_sentinel(spark, real, max_ts, prefix="vwap_replay_")
-    name = f"vwap_replay_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-        query = (
-            vwap_stream(
-                read_price_stream(spark, os.path.join(spool, "*.parquet")),
-                delay="0 seconds",
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
+    active = spark.streams.active
+    if active:
+        raise RuntimeError(
+            f"{name} replay started while streaming queries "
+            f"{[q.name for q in active]} are active; its session-global "
+            "conf pin would leak into them"
         )
-        _drain_spool(query, spool, "vwap", timeout_s)
-    return spark.table(name).filter(F.col("coin_id") != "__sentinel__")
-
-def _spool_partitions(spark: SparkSession, spool: str) -> int:
-    """Shuffle/state partition count for a spool replay, derived from
-    the spooled feed's ON-DISK byte size (OPTIMIZATION_r14, guide §2.2:
-    partitioning follows measured data size, never the local core
-    count). Structured Streaming pins the stateful-operator partition
-    count to ``spark.sql.shuffle.partitions`` at query start and AQE
-    never applies to streaming plans, so the session default (sized
-    for batch) made every micro-batch run 32 state-store tasks over a
-    few MB of feed — pure task/commit overhead, multiplied by the
-    per-store quadruple of a stream-stream join. One ~64 MB-of-parquet
-    state partition is the same sizing rule a production stream would
-    use for its key space; the cap keeps a huge spool at the session's
-    configured parallelism."""
-    import os
-
-    total = 0
-    for root, _dirs, files in os.walk(spool):
-        for f in files:
-            if f.endswith(".parquet"):
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return int(max(1, min(total // (64 << 20) + 1, cap)))
-
-
-class _stream_shuffle_pin:
-    """Context manager: pin ``spark.sql.shuffle.partitions`` to a
-    derived value while a replay query starts and drains (the stream's
-    cloned session captures the conf at start), restore on exit. The
-    replay builders are sequential (bench/driver/pytest), so the
-    session-global conf write cannot race another query.
-
-    Also pins ``spark.sql.streaming.minBatchesToRetain`` to 2 for the
-    drain (OPTIMIZATION_r15, measured ~4% on the 36-trigger restfeed
-    replay): the default 100 sizes state-store version retention for
-    mid-stream failure recovery, but every replay's checkpoint is a
-    throwaway tempdir deleted before returning — there is nothing to
-    recover, at any scale. ``partitions=None`` applies only the
-    retention pin (the drawdown replay keeps the session partition
-    count — see its call site)."""
-
-    def __init__(self, spark: SparkSession, partitions: int | None) -> None:
-        self._spark = spark
-        self._n = None if partitions is None else int(partitions)
-
-    def __enter__(self) -> None:
-        # The pin relies on the sequential-callers invariant: a second
-        # streaming query started during a pinned drain would silently
-        # capture this pin's partition count at ITS start (ADVICE r14).
-        # Assert the invariant instead of documenting it — every
-        # harness is sequential today, so this is free; a future
-        # concurrent caller fails loudly here instead of mis-pinning.
-        active = self._spark.streams.active
-        if active:
-            raise RuntimeError(
-                "_stream_shuffle_pin entered while other streaming "
-                f"queries are active ({[q.name for q in active]}); the "
-                "session-global shuffle-partition pin would leak into "
-                "them — run replays sequentially or move the pin to a "
-                "cloned session"
+    root = tempfile.mkdtemp(prefix=f"{name}_replay_")
+    spool, out = os.path.join(root, "spool"), sinks.table_dir(root, "out")
+    os.makedirs(spool)
+    base_mtime, n = time.time() - 3600, 0
+    saved: dict[str, str | None] = {}
+    query = None
+    try:
+        for wave_no, frames in enumerate(waves):
+            for df in frames:
+                tmp = os.path.join(root, "tmp")
+                df.write.parquet(tmp)
+                for f in sorted(os.listdir(tmp)):
+                    if f.endswith(".parquet"):
+                        dst = os.path.join(spool, f"{n:04d}.parquet")
+                        os.rename(os.path.join(tmp, f), dst)
+                        os.utime(dst, (base_mtime + n, base_mtime + n))
+                        n += 1
+                shutil.rmtree(tmp)
+            if wave_no == 0:
+                pins = {"spark.sql.streaming.minBatchesToRetain": "2"}
+                if pin_partitions:
+                    if feed_bytes is None:
+                        feed_bytes = sum(
+                            os.path.getsize(os.path.join(spool, f))
+                            for f in os.listdir(spool)
+                        )
+                    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+                    pins["spark.sql.shuffle.partitions"] = str(
+                        max(1, min(feed_bytes // (64 << 20) + 1, cap))
+                    )
+                for key, val in pins.items():
+                    saved[key] = spark.conf.get(key, None)
+                    spark.conf.set(key, val)
+            writer = stream(spool).writeStream.option(
+                "checkpointLocation", os.path.join(root, "ckpt")
             )
-        self._saved: dict[str, str | None] = {}
-        pins = {"spark.sql.streaming.minBatchesToRetain": "2"}
-        if self._n is not None:
-            pins["spark.sql.shuffle.partitions"] = str(self._n)
-        for key, val in pins.items():
-            try:
-                self._saved[key] = self._spark.conf.get(key)
-            except Exception:  # noqa: BLE001 — unset restores to unset
-                self._saved[key] = None
-            self._spark.conf.set(key, val)
-
-    def __exit__(self, *exc) -> None:
-        for key, val in self._saved.items():
-            if val is None:
-                self._spark.conf.unset(key)
+            if per_batch is None:
+                writer = writer.outputMode("append").format("parquet")
+                writer = writer.option("path", out)
             else:
-                self._spark.conf.set(key, val)
+                writer = writer.foreachBatch(
+                    lambda batch, epoch: sinks.write_table(
+                        per_batch(batch, epoch, out), root, "out", epoch_id=epoch
+                    )
+                )
+            if available_now:
+                query = writer.trigger(availableNow=True).start()
+                if not query.awaitTermination(timeout_s):
+                    raise TimeoutError(
+                        f"{name} replay did not finish in {timeout_s}s"
+                    )
+            else:
+                query = writer.trigger(processingTime="50 milliseconds").start()
+                query.processAllAvailable()
+                query.stop()
+        result = spark.read.schema(out_schema).parquet(out).drop("batch_epoch")
+        if keep is not None:
+            result = result.filter(keep)
+        return result.localCheckpoint(eager=True)
+    finally:
+        if query is not None:
+            query.stop()
+        for key, val in saved.items():
+            if val is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, val)
+        shutil.rmtree(root, ignore_errors=True)
 
 
-def _drain_spool(query, spool: str, what: str, timeout_s: int) -> None:
-    """Await an availableNow drain, then DELETE the spool tempdir: the
-    memory sink has materialized every emitted row on the driver by
-    termination, so the source files are dead weight — without this
-    every bench/test run grew /tmp by one spool (ADVICE r6). The spool
-    is removed on the timeout path too (the query is stopped first)."""
-    import shutil
-
-    ok = query.awaitTermination(timeout_s)
-    if not ok:
-        query.stop()
-    shutil.rmtree(spool, ignore_errors=True)
-    if not ok:
-        raise TimeoutError(f"{what} replay did not finish in {timeout_s}s")
+def _feed(df: DataFrame, *extra: str):
+    """The replayed tick columns materialized once (the bounds
+    aggregate and every spool write read them) plus their min and max
+    timestamp, both None for an empty feed."""
+    real = df.select(
+        "coin_id", "exchange", "timestamp", "price", "volume", *extra
+    ).localCheckpoint(eager=True)
+    lo, hi = real.agg(F.min("timestamp"), F.max("timestamp")).collect()[0]
+    return real, lo, hi
 
 
-def _sentinel_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
-    """One-partition local PRICE_SCHEMA frame for spool sentinels
-    (OPTIMIZATION_r15, guide §4 — the Python boundary in an unexpected
-    place): ``createDataFrame(list-of-tuples)`` parallelizes the rows
-    over ``defaultParallelism`` PYTHON-RDD slices, so the
-    ``coalesce(1)`` the one-file spool write needs makes a single task
-    iterate all 32 slices SEQUENTIALLY, paying one Python-worker
-    round-trip per slice — measured 5.2 s to write a ONE-ROW sentinel
-    at local[32], the single largest fixed cost in every spool replay.
-    The pandas+Arrow path materializes the same rows as ONE JVM
-    partition (measured 0.5 s, values identical — both paths convert
-    naive timestamps via the UTC session zone)."""
+def _sentinel_frame(
+    spark: SparkSession, hi, keys=((_SENTINEL, _SENTINEL),)
+) -> DataFrame:
+    """One tick per (coin_id, exchange) in ``keys`` at ``hi`` + 72 h,
+    which pushes the final watermark past every real window, session or
+    join buffer so append mode emits them all. Built via pandas+Arrow as
+    ONE JVM partition: a list of tuples spreads over defaultParallelism
+    Python-RDD slices that the one-file spool write walks one by one
+    (5.2 s for one row at local[32] vs 0.5 s; same values)."""
     import pandas as pd
 
+    far = hi + timedelta(hours=72)
     return spark.createDataFrame(
         pd.DataFrame(
-            rows, columns=["coin_id", "exchange", "timestamp", "price", "volume"]
+            [(c, x, far, 0.0, 0.0) for c, x in keys],
+            columns=["coin_id", "exchange", "timestamp", "price", "volume"],
         ),
         schema=PRICE_SCHEMA,
     )
 
 
-def _spool_with_sentinel(spark: SparkSession, real: DataFrame, max_ts, prefix: str) -> str:
-    """Spool a price feed to a flat parquet dir plus one far-future
-    sentinel tick (+72 h): the sentinel advances the final watermark
-    past every REAL window/session so an availableNow replay emits them
-    all in append mode. Shared by every *_stream_replay builder."""
-    import os
-    import shutil
-    import tempfile
-    from datetime import timedelta
-
-    spool = tempfile.mkdtemp(prefix=prefix)
-    real.coalesce(4).write.mode("overwrite").parquet(os.path.join(spool, "feed"))
-    sentinel = _sentinel_frame(
-        spark,
-        [("__sentinel__", "__sentinel__", max_ts + timedelta(hours=72), 0.0, 0.0)],
+def vwap_stream_replay(
+    spark: SparkSession, price: DataFrame, timeout_s: int = 600
+) -> DataFrame:
+    """[[vwap_stream]] (delay 0) over the feed plus a +72 h sentinel:
+    the sentinel pushes the final watermark past every real window, so
+    append mode emits exactly the batch VWAP of the real feed (oracle:
+    the ``vwap_hourly`` SQL)."""
+    out_schema = (
+        "coin_id string, exchange string, timestamp timestamp,"
+        " vwap double, total_volume double, n_ticks bigint"
     )
-    sentinel.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(spool, "sentinel")
+    real, _lo, hi = _feed(price)
+    if hi is None:
+        return spark.createDataFrame([], out_schema)
+    return _replay(
+        spark, "vwap", [[real.coalesce(4), _sentinel_frame(spark, hi)]],
+        lambda spool: vwap_stream(read_price_stream(spark, spool), delay="0 seconds"),
+        out_schema, timeout_s, keep=_NOT_SENTINEL,
     )
-    # flatten: the file stream reads plain *.parquet files in one dir
-    # (the dataset-dir _SUCCESS markers must not reach the reader)
-    n = 0
-    for sub in ("feed", "sentinel"):
-        subdir = os.path.join(spool, sub)
-        for f in sorted(os.listdir(subdir)):
-            if f.endswith(".parquet"):
-                os.rename(
-                    os.path.join(subdir, f),
-                    os.path.join(spool, f"{n:04d}.parquet"),
-                )
-                n += 1
-        shutil.rmtree(subdir)
-    return spool
 
 
 def session_stream_replay(
     spark: SparkSession, price: DataFrame, gap_minutes: int = 360,
     timeout_s: int = 600,
 ) -> DataFrame:
-    """Deterministic end-to-end replay of [[session_stream]] — the
-    second streaming path to earn a driver-side oracle-hash row (after
-    [[vwap_stream_replay]]): spool + sentinel, event-time session
-    windows run to completion under ``availableNow``, and the emitted
-    sessions must hash-match the BATCH gaps-and-islands sessionization
-    (`trading_sessions`' exact SQL) — session_window semantics
-    (end = last tick + gap, exclusive) equal the batch formulation by
-    construction, and this proves it engine-to-engine.
-
-    As with the VWAP replay, the streaming job runs at BUILD time; a
-    bench timing of the returned frame measures the memory-sink scan.
-    """
-    import os
-    import uuid
-
+    """[[session_stream]] (delay 0) over the feed plus a +72 h sentinel:
+    the emitted sessions must equal the batch gaps-and-islands
+    sessionization (``trading_sessions``' SQL) — session_window's
+    end = last tick + gap (exclusive) is the batch formulation."""
     out_schema = (
         "coin_id string, exchange string, session_start timestamp,"
         " session_end timestamp, n_ticks bigint, low double, high double"
     )
-    real = price.select("coin_id", "exchange", "timestamp", "price", "volume")
-    # one materialization feeds the bounds aggregate AND the spool write
-    # (OPTIMIZATION_r15, guide §2.4 — each consumer otherwise re-derives
-    # the tick feed; ABAB at sf0.1: vwap median 4.4 -> 4.1 s)
-    real = real.localCheckpoint(eager=True)
-    max_ts = real.agg(F.max("timestamp")).collect()[0][0]
-    if max_ts is None:
+    real, _lo, hi = _feed(price)
+    if hi is None:
         return spark.createDataFrame([], out_schema)
-    spool = _spool_with_sentinel(spark, real, max_ts, prefix="session_replay_")
-    name = f"session_replay_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-        query = (
-            session_stream(
-                read_price_stream(spark, os.path.join(spool, "*.parquet")),
-                gap_minutes=gap_minutes,
-                delay="0 seconds",
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain_spool(query, spool, "session", timeout_s)
-    return spark.table(name).filter(F.col("coin_id") != "__sentinel__")
+    return _replay(
+        spark, "session", [[real.coalesce(4), _sentinel_frame(spark, hi)]],
+        lambda spool: session_stream(
+            read_price_stream(spark, spool),
+            gap_minutes=gap_minutes,
+            delay="0 seconds",
+        ),
+        out_schema, timeout_s, keep=_NOT_SENTINEL,
+    )
 
 
 def ohlc_stream_replay(
     spark: SparkSession, price: DataFrame, timeout_s: int = 600
 ) -> DataFrame:
-    """Deterministic end-to-end replay of [[ohlc_stream]] — the third
-    streaming path with a driver-side oracle-hash row, and the one
-    whose batch twin (``ohlc_candles``) feeds half the engine's candle
-    analytics: spool + sentinel ([[_spool_with_sentinel]]), watermarked
-    tumbling candles run to completion under ``availableNow``, and the
-    emitted candles must hash-match the batch ``ohlc_data`` SQL exactly
-    — the struct-ordering open/close convention is what makes
-    batch===stream hold on tied timestamps.
-
-    As with the other replays, the streaming job runs at BUILD time; a
-    bench timing of the returned frame measures the memory-sink scan.
-    """
-    import os
-    import uuid
-
-    out_schema = (
-        "coin_id string, exchange string, timestamp timestamp,"
-        " open double, high double, low double, close double"
+    """[[ohlc_stream]] (delay 0) over the feed plus a +72 h sentinel:
+    the emitted candles must equal the batch ``ohlc_data`` exactly —
+    the struct-ordering open/close convention is what keeps batch ===
+    stream on tied timestamps."""
+    real, _lo, hi = _feed(price)
+    if hi is None:
+        return spark.createDataFrame([], _OHLC_SCHEMA)
+    return _replay(
+        spark, "ohlc", [[real.coalesce(4), _sentinel_frame(spark, hi)]],
+        lambda spool: ohlc_stream(read_price_stream(spark, spool), delay="0 seconds"),
+        _OHLC_SCHEMA, timeout_s, keep=_NOT_SENTINEL,
     )
-    real = price.select("coin_id", "exchange", "timestamp", "price", "volume")
-    # one materialization feeds the bounds aggregate AND the spool write
-    # (OPTIMIZATION_r15, guide §2.4 — each consumer otherwise re-derives
-    # the tick feed; ABAB at sf0.1: vwap median 4.4 -> 4.1 s)
-    real = real.localCheckpoint(eager=True)
-    max_ts = real.agg(F.max("timestamp")).collect()[0][0]
-    if max_ts is None:
-        return spark.createDataFrame([], out_schema)
-    spool = _spool_with_sentinel(spark, real, max_ts, prefix="ohlc_replay_")
-    name = f"ohlc_replay_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-        query = (
-            ohlc_stream(
-                read_price_stream(spark, os.path.join(spool, "*.parquet")),
-                delay="0 seconds",
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain_spool(query, spool, "ohlc", timeout_s)
-    return spark.table(name).filter(F.col("coin_id") != "__sentinel__")
 
 
 def spread_stream_replay(
@@ -717,52 +653,24 @@ def spread_stream_replay(
     watermark_minutes: int = 60,
     timeout_s: int = 600,
 ) -> DataFrame:
-    """Fourth driver-checkable STREAMING path, and the first for a
-    STREAM-STREAM join ([[cross_exchange_stream_join]]): the spooled
-    feed replayed under ``availableNow``, emitted matched pairs must
-    hash-match the batch theta join exactly. Unlike the windowed-agg
-    replays no sentinel is needed — an append-mode INNER join emits a
-    match as soon as both rows arrive; the watermark only bounds
-    buffered state, never withholds results.
-
-    As with the other replays the streaming job runs at BUILD time; a
-    bench timing of the returned frame measures the memory-sink scan.
-    """
-    import os
-    import tempfile
-    import uuid
-
-    out_schema = (
-        "symbol string, ts_a timestamp, price_a double,"
-        " ts_b timestamp, price_b double, spread double"
+    """The stream-stream INNER join ([[cross_exchange_stream_join]]):
+    the emitted pairs must equal the batch theta join. No sentinel — an
+    append-mode inner join emits a match as soon as both rows arrive;
+    the watermark only bounds buffered state."""
+    real, _lo, hi = _feed(price)
+    if hi is None:
+        return spark.createDataFrame([], _SPREAD_SCHEMA)
+    return _replay(
+        spark, "spread", [[real.coalesce(4)]],
+        lambda spool: cross_exchange_stream_join(
+            read_price_stream(spark, spool),
+            exchange_a,
+            exchange_b,
+            tolerance_minutes=tolerance_minutes,
+            watermark_minutes=watermark_minutes,
+        ),
+        _SPREAD_SCHEMA, timeout_s,
     )
-    real = price.select("coin_id", "exchange", "timestamp", "price", "volume")
-    # one materialization feeds the bounds aggregate AND the spool write
-    # (OPTIMIZATION_r15, guide §2.4 — each consumer otherwise re-derives
-    # the tick feed; ABAB at sf0.1: vwap median 4.4 -> 4.1 s)
-    real = real.localCheckpoint(eager=True)
-    if real.isEmpty():
-        return spark.createDataFrame([], out_schema)
-    spool = tempfile.mkdtemp(prefix="spread_replay_")
-    real.coalesce(4).write.mode("overwrite").parquet(os.path.join(spool, "feed"))
-    name = f"spread_replay_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-        query = (
-            cross_exchange_stream_join(
-                read_price_stream(spark, os.path.join(spool, "feed", "*.parquet")),
-                exchange_a,
-                exchange_b,
-                tolerance_minutes=tolerance_minutes,
-                watermark_minutes=watermark_minutes,
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain_spool(query, spool, "spread", timeout_s)
-    return spark.table(name)
 
 
 def restfeed_stream_replay(
@@ -772,443 +680,136 @@ def restfeed_stream_replay(
     minutes: int = 180,
     timeout_s: int = 600,
 ) -> DataFrame:
-    """Fifth driver-checkable STREAMING path, and the first whose
-    SOURCE is the custom Python DataSource (sources.restfeed) rather
-    than a parquet spool: the reference's REST poll loop
-    (dags/crypto_data_streaming.py:223-246 fetches a page feed every 5
-    minutes) replayed end-to-end — ``readStream.format("cryptofeed")``
-    drains ``minutes`` of the deterministic feed in 5-minute
-    micro-batches under ``availableNow``, through the watermarked
-    tumbling-candle aggregate ([[ohlc_stream]]), into a memory sink.
-
-    No sentinel, deliberately: the final watermark stops at the feed's
-    last tick (minute ``minutes - 1``), so the LAST hour's window never
-    closes and append mode withholds it — the emitted result is exactly
-    the closed-form candles of the first ``minutes // 60 - 1`` full
-    hours (+ nothing from the open tail), which is the watermark
-    semantics the oracle encodes. The feed is integer arithmetic, so
-    the oracle replays generation + candles + the withheld-window rule
-    entirely in SQL (hash-exact, not rows-only).
-
-    Trigger mechanics: Python micro-batch streams do not support
-    ``availableNow`` (Spark falls back to single-batch execution,
-    which in append mode emits nothing — observed, not speculated), so
-    the drain is a fast ``processingTime`` loop + ``processAllAvailable``
-    — which ALSO waits for the trailing no-data micro-batch that
-    commits the final watermark and flushes the closed windows to the
-    sink (its barrier is "no pending offsets AND no pending commits",
-    and the no-data batch is scheduled immediately once the watermark
-    advances past committed state).
-
-    As with the other replays the streaming job runs at BUILD time; a
-    bench timing of the returned frame measures the memory-sink scan.
-    """
-    import uuid
-
+    """The custom Python DataSource (sources.restfeed) as the source:
+    the reference's REST poll loop (dags/crypto_data_streaming.py:
+    223-246) drained in 5-minute micro-batches through [[ohlc_stream]].
+    No sentinel, deliberately: the final watermark stops at the last
+    tick, so append mode withholds the open last hour and the result is
+    the closed-form candles of the first ``minutes // 60 - 1`` hours,
+    as the oracle states in SQL. The feed size is closed-form too (one
+    ~50-byte tick per page-coin and minute). The processing-time drain
+    has no bound; ``timeout_s`` stays for signature parity."""
     from ..sources import restfeed
 
     restfeed.register(spark)
-    feed = (
-        spark.readStream.format("cryptofeed")
-        .option("pages", pages)
-        .option("coins_per_page", coins_per_page)
-        .option("minutes", minutes)
-        .option("batch_minutes", 5)
-        .load()
-    )
-    name = f"restfeed_replay_{uuid.uuid4().hex[:8]}"
-    # the feed is closed-form, so its size is known WITHOUT a scan:
-    # one tick per (page-coin, minute) — derive the state partition
-    # count the same way the spool replays derive theirs from on-disk
-    # bytes (~50 B/tick; OPTIMIZATION_r14, guide §2.2). The session
-    # default made each of the 36 five-minute micro-batches run 32
-    # state-store tasks over ~100 rows.
-    n_ticks = pages * coins_per_page * minutes
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    parts = int(max(1, min((n_ticks * 50) // (64 << 20) + 1, cap)))
-    with _stream_shuffle_pin(spark, parts):
-        query = (
-            ohlc_stream(feed, delay="0 seconds")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(processingTime="50 milliseconds")
-            .start()
+
+    def stream(_spool: str) -> DataFrame:
+        feed = (
+            spark.readStream.format("cryptofeed")
+            .option("pages", pages)
+            .option("coins_per_page", coins_per_page)
+            .option("minutes", minutes)
+            .option("batch_minutes", 5)
+            .load()
         )
-        try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
-        query.awaitTermination(timeout_s)
-    return spark.table(name)
+        return ohlc_stream(feed, delay="0 seconds")
+
+    return _replay(
+        spark, "restfeed", [[]], stream, _OHLC_SCHEMA, timeout_s,
+        feed_bytes=pages * coins_per_page * minutes * 50,
+        available_now=False,
+    )
 
 
 def dedup_stream_replay(
     spark: SparkSession, price: DataFrame, timeout_s: int = 600
 ) -> DataFrame:
-    """Deterministic end-to-end replay of [[dedup_stream]] — the sixth
-    streaming path with a driver-side oracle-hash row, and the first
-    for the at-least-once -> effectively-once ingestion guard: the
-    spool holds the real feed PLUS planted re-deliveries (an exact
-    copy of ~1/7 of the rows, landing in later spool files like a
-    source retry would), and the stream dedups on the FULL row with a
-    watermark delay that outlasts the whole replay horizon, so every
-    re-delivery is dropped no matter which micro-batch it lands in.
-    Emitted rows are therefore exactly DISTINCT(feed) — the oracle is
-    one DISTINCT over the batch price base, and a single surviving
-    duplicate flips the driver hash.
-
-    Full-row keys are what make the replay deterministic: copies are
-    bit-identical, so WHICH copy survives is unobservable — no
-    arrival-order dependence. No sentinel either, deliberately:
-    dedup emission is immediate (filter-shaped state, not
-    window-close-gated), so append mode needs no final watermark push.
-    With a production-sized delay the state-eviction path (re-emission
-    after the watermark passes a key) is exercised by the pytest, not
-    the replay.
-
-    As with the other replays the streaming job runs at BUILD time; a
-    bench timing of the returned frame measures the memory-sink scan.
-    """
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
+    """[[dedup_stream]], the at-least-once -> effectively-once guard:
+    the spool holds the feed plus exact copies of ~1/7 of its rows in
+    later files (a source retry), deduped on the FULL row with a delay
+    that outlasts the replay, so the output is exactly DISTINCT(feed).
+    Full-row keys make the surviving copy unobservable, and dedup emits
+    at once, so no sentinel; state eviction is left to the pytest."""
     cols = ["coin_id", "exchange", "timestamp", "price", "volume"]
-    real = price.select(*cols)
-    spool = tempfile.mkdtemp(prefix="dedup_replay_")
-    real.coalesce(4).write.mode("overwrite").parquet(os.path.join(spool, "feed"))
-    redelivered = real.filter(
-        F.crc32(
-            F.concat_ws(
-                "|", "coin_id", "exchange", F.col("timestamp").cast("string")
-            )
-        )
-        % 7
-        == 0
+    real, _lo, hi = _feed(price)
+    if hi is None:
+        return spark.createDataFrame([], PRICE_SCHEMA)
+    key = F.concat_ws("|", "coin_id", "exchange", F.col("timestamp").cast("string"))
+    redelivered = real.filter(F.crc32(key) % 7 == 0)
+    return _replay(
+        spark, "dedup", [[real.coalesce(4), redelivered.coalesce(2)]],
+        lambda spool: dedup_stream(
+            read_price_stream(spark, spool), keys=cols, delay="8760 hours"
+        ),
+        PRICE_SCHEMA, timeout_s,
     )
-    redelivered.coalesce(2).write.mode("overwrite").parquet(
-        os.path.join(spool, "redeliver")
-    )
-    n = 0
-    for sub in ("feed", "redeliver"):
-        subdir = os.path.join(spool, sub)
-        for f in sorted(os.listdir(subdir)):
-            if f.endswith(".parquet"):
-                os.rename(
-                    os.path.join(subdir, f), os.path.join(spool, f"{n:04d}.parquet")
-                )
-                n += 1
-        shutil.rmtree(subdir)
-    name = f"dedup_replay_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-        query = (
-            dedup_stream(
-                read_price_stream(spark, os.path.join(spool, "*.parquet")),
-                keys=cols,
-                delay="8760 hours",
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain_spool(query, spool, "dedup", timeout_s)
-    return spark.table(name)
 
 
 def recovery_stream_replay(
     spark: SparkSession, price: DataFrame, timeout_s: int = 600
 ) -> DataFrame:
-    """Exactly-once / checkpoint-recovery replay (T7) — the seventh
-    driver-hash streaming row, promoting failure recovery from
-    pytest-only evidence to an oracle-verified row: the drain is
-    KILLED mid-feed and restarted from its checkpoint, and the final
-    sink contents must hash-match the uninterrupted batch candles.
-
-    Mechanics: the feed is split AT A TIMESTAMP into two spool waves
-    (phase 1: ts <= midpoint; phase 2: the rest + the +72 h sentinel).
-    Run 1 drains wave 1 under ``availableNow`` through watermarked
-    tumbling OHLC into a PARQUET sink (the fault-tolerant sink family,
-    unlike the other replays' memory sinks) with a checkpoint, then
-    terminates — the hour straddling the split is still OPEN in state,
-    so the interruption lands mid-window, not at a tidy boundary.
-    Run 2 renames wave 2 into the spool and restarts the SAME query
-    from the SAME checkpoint: carried state must complete the
-    straddling hour from both waves' ticks, the sentinel closes every
-    real window, and the file-source log must neither re-read wave 1
-    (no duplicate candles) nor drop wave-2 ticks (time-split waves
-    keep every phase-2 window end above the recovered watermark).
-    Any failure mode — lost state, double emission, late-drop —
-    changes the final frame and flips the driver hash against the
-    batch-candle oracle (same SQL as [[ohlc_stream_replay]]).
-
-    The split point is the min/max-timestamp midpoint (two 1-row
-    driver reads, same documented boundary as the other replay
-    builders). The streaming jobs run at BUILD time; the returned
-    frame is localCheckpoint-materialized so every tempdir (spool,
-    checkpoint, sink) is deleted before returning — a bench timing
-    measures the materialized scan.
-    """
-    import os
-    import shutil
-    import tempfile
-    from datetime import timedelta
-
-    out_schema = (
-        "coin_id string, exchange string, timestamp timestamp,"
-        " open double, high double, low double, close double"
+    """Checkpoint recovery (T7): [[ohlc_stream]] is stopped mid-feed and
+    restarted from its checkpoint; the sink must equal the batch
+    candles. The feed splits at its timestamp midpoint into two waves
+    (the second ends with the +72 h sentinel). Drain 1 ends with the
+    straddling hour OPEN in state; drain 2 must finish it from both
+    waves, without re-reading wave 1 or dropping wave-2 ticks (the time
+    split keeps wave-2 windows above the recovered watermark)."""
+    real, lo, hi = _feed(price)
+    if hi is None:
+        return spark.createDataFrame([], _OHLC_SCHEMA)
+    mid = lo + (hi - lo) / 2
+    ts = F.col("timestamp")
+    return _replay(
+        spark, "recovery",
+        [
+            [real.filter(ts <= mid).coalesce(2)],
+            [real.filter(ts > mid).unionByName(_sentinel_frame(spark, hi)).coalesce(2)],
+        ],
+        lambda spool: ohlc_stream(read_price_stream(spark, spool), delay="0 seconds"),
+        _OHLC_SCHEMA, timeout_s, keep=_NOT_SENTINEL,
     )
-    real = price.select("coin_id", "exchange", "timestamp", "price", "volume")
-    # one materialization feeds the bounds aggregate AND the spool write
-    # (OPTIMIZATION_r15, guide §2.4 — each consumer otherwise re-derives
-    # the tick feed; ABAB at sf0.1: vwap median 4.4 -> 4.1 s)
-    real = real.localCheckpoint(eager=True)
-    bounds = real.agg(
-        F.min("timestamp").alias("lo"), F.max("timestamp").alias("hi")
-    ).collect()[0]
-    if bounds.lo is None:
-        return spark.createDataFrame([], out_schema)
-    mid = bounds.lo + (bounds.hi - bounds.lo) / 2
-
-    root = tempfile.mkdtemp(prefix="recovery_replay_")
-    spool = os.path.join(root, "spool")
-    held = os.path.join(root, "held")
-    os.makedirs(spool)
-    os.makedirs(held)
-    real.filter(F.col("timestamp") <= mid).coalesce(2).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(root, "wave1"))
-    sentinel = _sentinel_frame(
-        spark,
-        [("__sentinel__", "__sentinel__", bounds.hi + timedelta(hours=72), 0.0, 0.0)],
-    )
-    real.filter(F.col("timestamp") > mid).unionByName(sentinel).coalesce(
-        2
-    ).write.mode("overwrite").parquet(os.path.join(root, "wave2"))
-    for src, dst in (("wave1", spool), ("wave2", held)):
-        subdir = os.path.join(root, src)
-        for i, f in enumerate(sorted(os.listdir(subdir))):
-            if f.endswith(".parquet"):
-                os.rename(
-                    os.path.join(subdir, f), os.path.join(dst, f"{src}_{i:02d}.parquet")
-                )
-        shutil.rmtree(subdir)
-
-    out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-
-    def drain() -> None:
-        # the pin only binds on run 1 — a checkpoint restart reuses the
-        # state partition count recorded in the offset log regardless
-        # of the session conf, which is exactly the consistency the
-        # recovery semantics need
-        with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-            query = (
-                ohlc_stream(
-                    read_price_stream(spark, os.path.join(spool, "*.parquet")),
-                    delay="0 seconds",
-                )
-                .writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not query.awaitTermination(timeout_s):
-                query.stop()
-                shutil.rmtree(root, ignore_errors=True)
-                raise TimeoutError(
-                    f"recovery replay did not finish in {timeout_s}s"
-                )
-
-    # try/finally: a failed drain (StreamingQueryException) must not
-    # leak the spool/sink/checkpoint tree (same class as the drawdown
-    # replay's code-review-r10 fix; the timeout path already cleaned)
-    try:
-        drain()  # run 1: wave 1 only — killed with the split hour open in state
-        for f in sorted(os.listdir(held)):
-            os.rename(os.path.join(held, f), os.path.join(spool, f))
-        drain()  # run 2: resumes from the checkpoint, drains wave 2 + sentinel
-        result = (
-            spark.read.schema(out_schema)
-            .parquet(out)
-            .filter(F.col("coin_id") != "__sentinel__")
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return result
 
 
 def enrich_stream_replay(
     spark: SparkSession, price: DataFrame, dim: DataFrame, timeout_s: int = 600
 ) -> DataFrame:
-    """Deterministic end-to-end replay of [[enrich_stream]] — the
-    STREAM-STATIC broadcast lookup join (the reference attaches coin
-    metadata to every tick the same way, client-side): the spooled
-    tick feed left-joins the coins dimension per micro-batch, and the
-    emitted rows must hash-match the one-shot batch left join. The
-    join is stateless (no watermark, no sentinel, every input row
-    emits exactly once, null-extended when the dimension misses), so
-    batch === stream by construction — this row proves it
-    engine-to-engine like the other seven streaming replays.
-
-    ``dim`` arrives keyed (coin_id, exchange, name, symbol); the
-    broadcast hint inside enrich_stream keeps the per-batch join
-    map-side — the executed micro-batch plans never shuffle the feed.
-    As with the other replays the streaming job runs at BUILD time; a
-    bench timing of the returned frame measures the memory-sink scan.
-    """
-    import os
-    import tempfile
-    import uuid
-
+    """[[enrich_stream]], the stream-static broadcast lookup join: every
+    tick left-joins the (coin_id, exchange, name, symbol) dimension per
+    micro-batch, and the emitted rows must equal the one-shot batch left
+    join. The join is stateless (no watermark, no sentinel; each tick
+    emits once, null-extended on a miss), and the broadcast keeps each
+    micro-batch's join map-side."""
     out_schema = (
         "coin_id string, exchange string, timestamp timestamp,"
         " price double, volume double, name string, symbol string"
     )
-    real = price.select("coin_id", "exchange", "timestamp", "price", "volume")
-    # one materialization feeds the bounds aggregate AND the spool write
-    # (OPTIMIZATION_r15, guide §2.4 — each consumer otherwise re-derives
-    # the tick feed; ABAB at sf0.1: vwap median 4.4 -> 4.1 s)
-    real = real.localCheckpoint(eager=True)
-    if real.isEmpty():
+    real, _lo, hi = _feed(price)
+    if hi is None:
         return spark.createDataFrame([], out_schema)
-    spool = tempfile.mkdtemp(prefix="enrich_replay_")
-    real.coalesce(4).write.mode("overwrite").parquet(os.path.join(spool, "feed"))
-    name = f"enrich_replay_{uuid.uuid4().hex[:8]}"
-    query = (
-        enrich_stream(
-            read_price_stream(spark, os.path.join(spool, "feed", "*.parquet")),
-            dim,
-            ["coin_id", "exchange"],
-        )
-        .select(
-            "coin_id", "exchange", "timestamp", "price", "volume", "name", "symbol"
-        )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    return _replay(
+        spark, "enrich", [[real.coalesce(4)]],
+        lambda spool: enrich_stream(
+            read_price_stream(spark, spool), dim, ["coin_id", "exchange"]
+        ),
+        out_schema, timeout_s,
     )
-    _drain_spool(query, spool, "enrich", timeout_s)
-    return spark.table(name)
 
 
 def late_drop_stream_replay(
     spark: SparkSession, price: DataFrame, timeout_s: int = 600
 ) -> DataFrame:
-    """Late-data DROP replay (T6's other half): the six green replay
-    rows prove windows CLOSE correctly; this one proves rows arriving
-    BEHIND the watermark are actually discarded. Wave 1 drains the
-    whole real feed into a parquet sink (checkpoint kept); wave 2
-    re-delivers SABOTAGE copies of the earliest hour's ticks — price
-    −1e6 — plus the +72 h sentinel, and restarts from the checkpoint.
-    The recovered watermark already sits at the real feed's max event
-    time, so every sabotage row's window has been finalized and the
-    windowed aggregate must DROP them; the sentinel then closes the
-    real tail windows. Final frame = exactly the batch candles of the
-    real feed — if watermark enforcement ever leaked a late row, the
-    earliest hour's `low` would plummet to −1e6 and the driver hash
-    would flip. (Same two-drain mechanics as [[recovery_stream_replay]];
-    the two builders pin complementary halves of restart semantics:
-    state CARRIED for open windows there, state FINALIZED against late
-    arrivals here.)
-
-    As with the other replays the streaming jobs run at BUILD time; the
-    returned frame is localCheckpoint-materialized and every tempdir is
-    deleted before returning.
-    """
-    import os
-    import shutil
-    import tempfile
-    from datetime import timedelta
-
-    out_schema = (
-        "coin_id string, exchange string, timestamp timestamp,"
-        " open double, high double, low double, close double"
+    """Late-data DROP (T6): drain 1 takes the whole feed, so the
+    recovered watermark sits at its max event time; wave 2 re-delivers
+    copies of the first hour's ticks at price -1e6 plus the sentinel.
+    Their windows are final, so the restarted aggregate must drop them
+    (a leak sinks the first ``low`` to -1e6) and the result equals the
+    batch candles. [[recovery_stream_replay]] pins the other half of
+    restart semantics. The feed must span more than one hour."""
+    real, lo, hi = _feed(price)
+    if hi is None:
+        return spark.createDataFrame([], _OHLC_SCHEMA)
+    sabotage = real.filter(F.col("timestamp") < lo + timedelta(hours=1))
+    sabotage = sabotage.withColumn("price", F.lit(-1_000_000.0))
+    return _replay(
+        spark, "late_drop",
+        [
+            [real.coalesce(2)],
+            [sabotage.unionByName(_sentinel_frame(spark, hi)).coalesce(2)],
+        ],
+        lambda spool: ohlc_stream(read_price_stream(spark, spool), delay="0 seconds"),
+        _OHLC_SCHEMA, timeout_s, keep=_NOT_SENTINEL,
     )
-    real = price.select("coin_id", "exchange", "timestamp", "price", "volume")
-    # one materialization feeds the bounds aggregate AND the spool write
-    # (OPTIMIZATION_r15, guide §2.4 — each consumer otherwise re-derives
-    # the tick feed; ABAB at sf0.1: vwap median 4.4 -> 4.1 s)
-    real = real.localCheckpoint(eager=True)
-    bounds = real.agg(
-        F.min("timestamp").alias("lo"), F.max("timestamp").alias("hi")
-    ).collect()[0]
-    if bounds.lo is None:
-        return spark.createDataFrame([], out_schema)
-
-    root = tempfile.mkdtemp(prefix="late_drop_replay_")
-    spool = os.path.join(root, "spool")
-    held = os.path.join(root, "held")
-    os.makedirs(spool)
-    os.makedirs(held)
-    real.coalesce(2).write.mode("overwrite").parquet(os.path.join(root, "wave1"))
-    first_hour_end = bounds.lo + timedelta(hours=1)
-    sabotage = (
-        real.filter(F.col("timestamp") < first_hour_end)
-        .withColumn("price", F.lit(-1_000_000.0))
-    )
-    sentinel = _sentinel_frame(
-        spark,
-        [("__sentinel__", "__sentinel__", bounds.hi + timedelta(hours=72), 0.0, 0.0)],
-    )
-    sabotage.unionByName(sentinel).coalesce(2).write.mode("overwrite").parquet(
-        os.path.join(root, "wave2")
-    )
-    for src, dst in (("wave1", spool), ("wave2", held)):
-        subdir = os.path.join(root, src)
-        for i, f in enumerate(sorted(os.listdir(subdir))):
-            if f.endswith(".parquet"):
-                os.rename(
-                    os.path.join(subdir, f), os.path.join(dst, f"{src}_{i:02d}.parquet")
-                )
-        shutil.rmtree(subdir)
-
-    out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-
-    def drain() -> None:
-        # pin binds on run 1 only; the checkpoint restart reuses the
-        # recorded state partition count (see recovery_stream_replay)
-        with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-            query = (
-                ohlc_stream(
-                    read_price_stream(spark, os.path.join(spool, "*.parquet")),
-                    delay="0 seconds",
-                )
-                .writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not query.awaitTermination(timeout_s):
-                query.stop()
-                shutil.rmtree(root, ignore_errors=True)
-                raise TimeoutError(
-                    f"late-drop replay did not finish in {timeout_s}s"
-                )
-
-    drain()  # run 1: the full real feed; watermark commits at max real ts
-    for f in sorted(os.listdir(held)):
-        os.rename(os.path.join(held, f), os.path.join(spool, f))
-    drain()  # run 2: sabotage late rows (must DROP) + sentinel (closes tail)
-    result = (
-        spark.read.schema(out_schema)
-        .parquet(out)
-        .filter(F.col("coin_id") != "__sentinel__")
-        .localCheckpoint()
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    return result
 
 
 def drawdown_stream_replay(
@@ -1217,136 +818,41 @@ def drawdown_stream_replay(
     n_waves: int = 3,
     timeout_s: int = 600,
 ) -> DataFrame:
-    """Custom-stateful (``applyInPandasWithState``) replay — promotes
-    T5 from pytest-only to a driver-hash row: the tick feed is split
-    into ``n_waves`` TIME-ORDERED spool waves drained one file per
-    micro-batch (``maxFilesPerTrigger=1``), so per-key state
-    (running peak, tick counter) genuinely crosses batch boundaries —
-    a peak set in wave 1 must still depress drawdowns in wave 3, and a
-    lost/duplicated state carry shifts ``running_peak``/``tick_n`` for
-    every later row and flips the hash. Unlike the indicator path
-    (whose EMA recursion differs from the closed-form oracle at
-    ~1e-11 — rtol-testable but not hash-safe), [[stateful_drawdown]]'s
-    arithmetic is bit-exact by construction, so the oracle is a plain
-    window-function replay (max OVER + one divide + row_number) over
-    the same tick projection.
-
-    No sentinel and no watermark: NoTimeout appendix-mode state emits
-    every row in the batch that carried it. Wave files get strictly
-    increasing mtimes (the file source schedules oldest-first); ties
-    in ``timestamp`` stay within one wave (strict-inequality split)
-    and are ordered by ``event_id`` inside the operator, mirroring the
-    oracle's window ORDER BY. The streaming job runs at BUILD time; a
-    bench timing of the returned frame measures the materialized scan.
-
-    Sink (r9 verdict item #4): PARQUET, not memory — the r9
-    measurement proved the memory sink is incompatible with this
-    operator at scale BY CONSTRUCTION (sf10's 10M emitted rows exceed
-    ``spark.driver.maxResultSize`` in one batch) and priced the driver
-    collection at ~+70 s on top of the per-trigger machinery. The
-    parquet sink is the same fault-tolerant evidence mechanism
-    [[recovery_stream_replay]] uses: rows land executor-side, the
-    returned frame is localCheckpoint-materialized, and every tempdir
-    (spool, sink, checkpoint) is deleted before returning. The replay
-    wall is EVIDENCE MACHINERY pricing either way — the three
-    coalesce(1) waves drained one unsplittable file per trigger exist
-    to prove cross-batch state carry; the OPERATOR's own scale shape
-    is 18x at 100x data (NOTES_r09 §5, production availableNow
-    trigger). Rows are identical to the memory-sink form (append-mode
-    emission order doesn't affect the frame's SET of rows), so the
-    driver hash is unchanged.
-    """
-    import os
-    import shutil
-    import tempfile
-    import time
-
+    """[[stateful_drawdown]] (``applyInPandasWithState``) with state that
+    crosses micro-batches: ``n_waves`` TIME-ORDERED one-file waves are
+    drained one file per trigger, so a wave-1 peak must still depress
+    wave-3 drawdowns. The arithmetic is bit-exact, so the oracle is a
+    plain window replay. No sentinel or watermark: NoTimeout state emits
+    each row in its batch. Timestamp ties stay in one wave
+    (strict-inequality split) and are ordered by ``event_id``."""
     from .stateful import stateful_drawdown
 
     out_schema = (
         "coin_id string, exchange string, timestamp timestamp, event_id long,"
         " price double, running_peak double, drawdown double, tick_n long"
     )
-    real = ticks.select(
-        "coin_id", "exchange", "timestamp", "price", "volume", "event_id"
-    )
-    # Materialize the feed ONCE before the wave writes (OPTIMIZATION
-    # r15, guide §2.4): each wave's REQUIRED coalesce(1) — one
-    # unsplittable file per trigger is the cross-batch state-carry
-    # evidence — otherwise collapses the whole upstream tick
-    # derivation into a single task, three times over; the checkpoint
-    # turns those into three single-task cache reads (and the bounds
-    # aggregate below reads it too). ABAB at sf0.1: medians
-    # 15.9 -> 13.6 s under ambient load; values unchanged.
-    real = real.localCheckpoint(eager=True)
-    bounds = real.agg(
-        F.min("timestamp").alias("lo"), F.max("timestamp").alias("hi")
-    ).collect()[0]
-    if bounds.lo is None:
+    real, lo, hi = _feed(ticks, "event_id")
+    if hi is None:
         return spark.createDataFrame([], out_schema)
-    span = (bounds.hi - bounds.lo) / n_waves
-    root = tempfile.mkdtemp(prefix="drawdown_replay_")
-    spool = os.path.join(root, "spool")
-    os.makedirs(spool)
-    base_mtime = time.time() - 3600
-    n = 0
-    for i in range(n_waves):
-        lo = bounds.lo + span * i
-        hi = bounds.hi if i == n_waves - 1 else bounds.lo + span * (i + 1)
-        wave = real.filter(
-            (F.col("timestamp") >= lo if i == 0 else F.col("timestamp") > lo)
-            & (F.col("timestamp") <= hi)
-        )
-        wdir = os.path.join(spool, f"wave{i}")
-        wave.coalesce(1).write.mode("overwrite").parquet(wdir)
-        for f in sorted(os.listdir(wdir)):
-            if f.endswith(".parquet"):
-                dst = os.path.join(spool, f"{n:04d}.parquet")
-                os.rename(os.path.join(wdir, f), dst)
-                os.utime(dst, (base_mtime + n, base_mtime + n))
-                n += 1
-        shutil.rmtree(wdir)
-    tick_schema = PRICE_SCHEMA + ", event_id long"
-    stream = (
-        spark.readStream.schema(tick_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(spool)
+    span, ts = (hi - lo) / n_waves, F.col("timestamp")
+    cuts = [lo + span * i for i in range(n_waves)] + [hi]
+    waves = [
+        real.filter((ts >= a if i == 0 else ts > a) & (ts <= b)).coalesce(1)
+        for i, (a, b) in enumerate(zip(cuts, cuts[1:]))
+    ]
+    # Partitions not pinned: applyInPandasWithState pays a Python round
+    # trip per key group each micro-batch, so it wants the session's
+    # task slots; the byte-derived single partition sent every group
+    # through one Python worker (13 s -> 129 s).
+    return _replay(
+        spark, "drawdown", [waves],
+        lambda spool: stateful_drawdown(
+            spark.readStream.schema(PRICE_SCHEMA + ", event_id long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(spool)
+        ),
+        out_schema, timeout_s, pin_partitions=False,
     )
-    out = os.path.join(root, "out")
-    ckpt = os.path.join(root, "ckpt")
-    # try/finally: a failed streaming query (StreamingQueryException
-    # from awaitTermination) must not leak the spool/sink/checkpoint
-    # tree either — the /tmp-growth mode the ADVICE-r6 _drain_spool
-    # cleanup exists to prevent (code-review r10)
-    # Deliberately NOT pinned to the spool-derived partition count
-    # (OPTIMIZATION_r14): applyInPandasWithState pays a per-KEY-GROUP
-    # Python protocol round-trip each micro-batch, so its parallelism
-    # wants the session's task slots, not the feed's byte size — the
-    # byte-derived 1-partition pin serialized all per-coin groups
-    # through one Python worker and measured 13 s -> 129 s. The other
-    # replays' stateful operators are JVM aggregates/joins, where the
-    # derived count only removes task overhead.
-    try:
-        with _stream_shuffle_pin(spark, None):  # retention-only pin
-            query = (
-                stateful_drawdown(stream)
-                .writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            ok = query.awaitTermination(timeout_s)
-        if not ok:
-            query.stop()
-            raise TimeoutError(
-                f"drawdown replay did not finish in {timeout_s}s"
-            )
-        result = spark.read.schema(out_schema).parquet(out).localCheckpoint()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return result
 
 
 def spread_outer_stream_replay(
@@ -1358,86 +864,31 @@ def spread_outer_stream_replay(
     watermark_minutes: int = 60,
     timeout_s: int = 600,
 ) -> DataFrame:
-    """Stream-stream LEFT OUTER join replay — the watermark semantic
-    the inner-join replay ([[spread_stream_replay]]) cannot show: an
-    unmatched left tick must be emitted null-extended exactly once,
-    and only after the watermark proves no future right tick can
-    match it. [[spread_stream_replay]]'s sentinel-free drain works for
-    INNER because matches emit on arrival; for LEFT OUTER the
-    null-extensions near the feed's end would stay buffered forever
-    without a final watermark push, so this builder spools an IN-BAND
-    sentinel pair — one tick per exchange at +72 h under the reserved
-    symbol ``C999999``, which passes the side filters (real symbols
-    are far smaller), advances BOTH sides' watermarks past every real
-    tick, matches only itself, and is dropped from the returned frame.
-
-    Emitted result == the batch LEFT theta join of the real feed
-    (matched pairs per match; unmatched left ticks once with NULL
-    ts_b/price_b/spread), which is exactly what the oracle states.
-    As with the other replays the streaming job runs at BUILD time; a
-    bench timing of the returned frame measures the memory-sink scan.
-    """
-    import os
-    import tempfile
-    import uuid
-    from datetime import timedelta
-
-    out_schema = (
-        "symbol string, ts_a timestamp, price_a double,"
-        " ts_b timestamp, price_b double, spread double"
-    )
-    real = price.select("coin_id", "exchange", "timestamp", "price", "volume")
-    # one materialization feeds the bounds aggregate AND the spool write
-    # (OPTIMIZATION_r15, guide §2.4 — each consumer otherwise re-derives
-    # the tick feed; ABAB at sf0.1: vwap median 4.4 -> 4.1 s)
-    real = real.localCheckpoint(eager=True)
-    max_ts = real.agg(F.max("timestamp")).collect()[0][0]
-    if max_ts is None:
-        return spark.createDataFrame([], out_schema)
-    spool = tempfile.mkdtemp(prefix="spread_outer_replay_")
-    real.coalesce(4).write.mode("overwrite").parquet(os.path.join(spool, "feed"))
-    far = max_ts + timedelta(hours=72)
+    """The stream-stream LEFT OUTER join: an unmatched left tick is
+    emitted null-extended once, after the watermark proves no right
+    tick can match it. The spool ends with an in-band sentinel pair (a
+    +72 h tick per exchange, reserved symbol ``C999999``) that advances
+    both watermarks past the feed, matches only itself and is dropped;
+    the result equals the batch LEFT theta join."""
+    real, _lo, hi = _feed(price)
+    if hi is None:
+        return spark.createDataFrame([], _SPREAD_SCHEMA)
     sentinel = _sentinel_frame(
-        spark,
-        [
-            ("sentinel_C999999", exchange_a, far, 0.0, 0.0),
-            ("sentinel_C999999", exchange_b, far, 0.0, 0.0),
-        ],
+        spark, hi,
+        [("sentinel_C999999", exchange_a), ("sentinel_C999999", exchange_b)],
     )
-    sentinel.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(spool, "sentinel")
+    return _replay(
+        spark, "spread_outer", [[real.coalesce(4), sentinel]],
+        lambda spool: cross_exchange_stream_join(
+            read_price_stream(spark, spool),
+            exchange_a,
+            exchange_b,
+            tolerance_minutes=tolerance_minutes,
+            watermark_minutes=watermark_minutes,
+            how="leftOuter",
+        ),
+        _SPREAD_SCHEMA, timeout_s, keep="symbol != 'C999999'",
     )
-    import shutil
-
-    n = 0
-    for sub in ("feed", "sentinel"):
-        subdir = os.path.join(spool, sub)
-        for f in sorted(os.listdir(subdir)):
-            if f.endswith(".parquet"):
-                os.rename(
-                    os.path.join(subdir, f), os.path.join(spool, f"{n:04d}.parquet")
-                )
-                n += 1
-        shutil.rmtree(subdir)
-    name = f"spread_outer_replay_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-        query = (
-            cross_exchange_stream_join(
-                read_price_stream(spark, os.path.join(spool, "*.parquet")),
-                exchange_a,
-                exchange_b,
-                tolerance_minutes=tolerance_minutes,
-                watermark_minutes=watermark_minutes,
-                how="leftOuter",
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain_spool(query, spool, "spread_outer", timeout_s)
-    return spark.table(name).filter(F.col("symbol") != "C999999")
 
 
 def quality_stream_replay(
@@ -1447,92 +898,31 @@ def quality_stream_replay(
     timeout_s: int = 600,
     n_files: int = 4,
 ) -> DataFrame:
-    """The TRAINED quality filter running where production runs it
-    (r12 verdict item #5): frozen classifier weights applied per
-    micro-batch inside ``foreachBatch`` — the same harness shape as
-    [[run_ingest]] (T3/T4), scoring each arriving document shard with
-    ``classifier.score_quality`` (one broadcast join of the 66-row
-    model + a doc-keyed aggregate, NO retraining: the weights frame is
-    localCheckpoint-frozen before the stream starts, so every batch
-    broadcasts the same materialized leaf) and appending the scored
-    rows through the epoch-partitioned parquet sink
-    (sinks.write_table's overwrite-per-epoch layout = effectively-once
-    on top of the checkpointed source offsets, T7's discipline).
-
-    Determinism: scoring is a pure per-document function of a fixed
-    model, so the union of per-batch outputs equals one batch scoring
-    pass REGARDLESS of micro-batch boundaries — batch === stream by
-    construction, proven engine-to-engine by this replay's driver-hash
-    row (oracle = the qclf scores CTE chain) and pinned
-    boundary-independently by the pytest (1-file vs many-file spool).
-
-    The spool is written as multiple files and drained with
-    ``maxFilesPerTrigger=1`` so per-batch model application genuinely
-    crosses micro-batch boundaries. As with the other replays the
-    streaming job runs at BUILD time; the returned frame is
-    localCheckpoint-materialized and every tempdir is deleted before
-    returning.
-    """
-    import os
-    import shutil
-    import tempfile
-
+    """The trained quality filter where production runs it: each
+    arriving document shard (``n_files`` files, one per trigger) is
+    scored inside ``foreachBatch`` by ``classifier.score_quality`` with
+    frozen, localCheckpointed weights, and appended through the
+    epoch-partitioned sink. Scoring is per document with a fixed model,
+    so the output equals one batch scoring pass whatever the batch
+    boundaries (the pytest compares a 1-file and a many-file spool)."""
     from ..operators import classifier
-    from .. import sinks
 
     out_schema = "doc_id long, score double, predicted boolean"
     docs = documents.select("doc_id", "text", "lang", "source")
     if docs.isEmpty():
         return spark.createDataFrame([], out_schema)
     wts = weights.localCheckpoint(eager=True)
-    spool = tempfile.mkdtemp(prefix="quality_replay_")
     # repartition, not coalesce: the fixture tables read as ONE
-    # partition, and coalesce can only shrink — a coalesce(4) spool
-    # would be a single file = a single micro-batch, silently turning
-    # every "crosses batch boundaries" claim vacuous (code-review r13)
-    docs.repartition(n_files).write.mode("overwrite").parquet(
-        os.path.join(spool, "feed")
+    # partition and coalesce can only shrink, so a coalesce(4) spool
+    # would be one file, one micro-batch.
+    return _replay(
+        spark, "quality", [[docs.repartition(n_files)]],
+        lambda spool: spark.readStream.schema(
+            "doc_id long, text string, lang string, source string"
+        ).option("maxFilesPerTrigger", 1).parquet(spool),
+        out_schema, timeout_s,
+        per_batch=lambda batch, _epoch, _out: classifier.score_quality(batch, wts),
     )
-    out_dir = tempfile.mkdtemp(prefix="quality_replay_out_")
-    ckpt = os.path.join(out_dir, "_ckpt")
-
-    def handle_batch(batch: DataFrame, epoch_id: int) -> None:
-        sinks.write_table(
-            classifier.score_quality(batch, wts),
-            out_dir,
-            "quality_scores",
-            epoch_id=epoch_id,
-        )
-
-    # one try/finally owns BOTH tempdirs: a query that dies inside
-    # handle_batch raises out of _drain_spool's awaitTermination before
-    # its own spool rmtree, and bench/driver runs swallow per-query
-    # errors and keep going — without this every failed run strands a
-    # full corpus copy in /tmp (code-review r13)
-    try:
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, text string, lang string, source string"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(spool, "feed", "*.parquet"))
-        )
-        with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-            query = (
-                stream.writeStream.foreachBatch(handle_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain_spool(query, spool, "quality", timeout_s)
-        return (
-            sinks.read_table(spark, out_dir, "quality_scores")
-            .select("doc_id", "score", "predicted")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(spool, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 def media_dedup_stream_replay(
@@ -1541,135 +931,57 @@ def media_dedup_stream_replay(
     timeout_s: int = 600,
     n_files: int = 4,
 ) -> DataFrame:
-    """STREAMING perceptual media dedup — the fingerprint-registry
-    ingestion a production media pipeline runs: each arriving image
-    shard is dHash-fingerprinted per micro-batch inside
-    ``foreachBatch`` (the same Arrow-batched map pass as the batch
-    family, [[multimodal.dhash_ppm]]), anti-joined against the
-    ACCUMULATED fingerprint registry (a parquet state dir the handler
-    appends to), and only first-seen fingerprints emit a survivor
-    row through the epoch-partitioned exactly-once sink; re-arrivals
-    of a known fingerprint are dropped in-stream. Output:
-    (band0..band3, rep_id), one row per distinct fingerprint.
+    """Streaming perceptual media dedup: each arriving image shard is
+    dHash-fingerprinted inside ``foreachBatch`` ([[multimodal.dhash_ppm]]),
+    anti-joined against the fingerprints earlier epochs emitted, and
+    only first-seen fingerprints emit (band0..band3, rep_id). The spool
+    is range-ordered (file k holds the k-th exact doc_id quantile chunk,
+    drained one per trigger), so each survivor is its fingerprint's
+    GLOBAL min doc_id, the batch rep collapse the oracle states.
 
-    Determinism contract — the streamed registry equals the BATCH
-    rep collapse: the spool is RANGE-ORDERED (file k holds the k-th
-    doc_id quantile chunk, exact ``approxQuantile(..., 0.0)`` cuts;
-    ``maxFilesPerTrigger=1`` with ascending file names AND mtimes
-    drains them in order), so a fingerprint's first-seen batch is the
-    one holding its smallest doc_id and the within-batch survivor is
-    min(doc_id) — hence the emitted survivor per fingerprint is the
-    GLOBAL min doc_id, exactly the ``reps`` table of the batch
-    perceptual family (min doc_id per distinct hash). The oracle is
-    that one GROUP BY; a registry that ever re-emits a known
-    fingerprint (or drops a first arrival) flips the driver hash.
-
-    Exactly-once: survivors land via sinks.write_table's
-    overwrite-per-epoch layout; a retried epoch REPLACES its output.
-    The registry state is ALSO epoch-partitioned and consulted with
-    ``epoch < epoch_id`` — so a retried epoch re-reads exactly the
-    registry its first attempt saw (its own half-written append is
-    excluded and then overwritten), re-derives the identical survivor
-    set, and the overwrite is a true no-op replay. (A flat append-only
-    state would make retries lose survivors: the left_anti join would
-    consult fingerprints the failed attempt already appended and emit
-    an empty epoch over the previously-written rows.)
-
-    As with the other replays the streaming job runs at BUILD time;
-    the returned frame is localCheckpoint-materialized and every
-    tempdir is deleted before returning.
-    """
-    import os
-    import shutil
-    import tempfile
-
+    The registry is the sink read with ``batch_epoch < epoch_id``: a
+    retried epoch sees what its first attempt saw, not its own partial
+    output, and overwrites its partition with the same survivors (an
+    append-only registry would make the retry emit an empty epoch)."""
     from ..operators.multimodal import dhash_ppm
-    from .. import sinks
 
     bands = ["band0", "band1", "band2", "band3"]
     out_schema = "band0 long, band1 long, band2 long, band3 long, rep_id long"
     media = media.select("doc_id", "width", "height", "payload")
     if media.isEmpty():
         return spark.createDataFrame([], out_schema)
-    media = media.persist()
-    # n_files=1 => no interior cuts (approxQuantile NPEs on an empty
+    media = media.localCheckpoint(eager=True)
+    # n_files=1 has no interior cuts (approxQuantile NPEs on an empty
     # probability list)
     cuts = (
-        media.approxQuantile(
-            "doc_id", [k / n_files for k in range(1, n_files)], 0.0
-        )
+        media.approxQuantile("doc_id", [k / n_files for k in range(1, n_files)], 0.0)
         if n_files > 1
         else []
     )
     edges = [float("-inf"), *cuts, float("inf")]
-    spool = tempfile.mkdtemp(prefix="media_dedup_replay_")
-    n = 0
-    for k in range(n_files):
-        chunk_dir = os.path.join(spool, f"chunk{k}")
-        media.filter(
-            (F.col("doc_id") > edges[k]) & (F.col("doc_id") <= edges[k + 1])
-        ).coalesce(1).write.mode("overwrite").parquet(chunk_dir)
-        for f in sorted(os.listdir(chunk_dir)):
-            if f.endswith(".parquet"):
-                dst = os.path.join(spool, f"{n:04d}.parquet")
-                os.rename(os.path.join(chunk_dir, f), dst)
-                os.utime(dst, (1_000_000 + n, 1_000_000 + n))
-                n += 1
-        shutil.rmtree(chunk_dir)
-    media.unpersist()
-    out_dir = tempfile.mkdtemp(prefix="media_dedup_replay_out_")
-    ckpt = os.path.join(out_dir, "_ckpt")
-    state_dir = os.path.join(out_dir, "_fpstate")
+    doc = F.col("doc_id")
+    chunks = [
+        media.filter((doc > a) & (doc <= b)).coalesce(1)
+        for a, b in zip(edges, edges[1:])
+    ]
 
-    def handle_batch(batch: DataFrame, epoch_id: int) -> None:
-        ss = batch.sparkSession
-        cand = (
-            dhash_ppm(batch)
-            .groupBy(*bands)
-            .agg(F.min("doc_id").alias("rep_id"))
-        )
-        if os.path.isdir(state_dir) and any(
-            d.startswith("epoch=") for d in os.listdir(state_dir)
-        ):
+    def per_batch(batch: DataFrame, epoch_id: int, out: str) -> DataFrame:
+        cand = dhash_ppm(batch).groupBy(*bands).agg(F.min("doc_id").alias("rep_id"))
+        if os.path.isdir(out):
             seen = (
-                ss.read.option("basePath", state_dir)
-                .parquet(state_dir)
-                .filter(F.col("epoch") < epoch_id)
-                .select(*bands)
+                batch.sparkSession.read.schema(out_schema + ", batch_epoch long")
+                .parquet(out)
+                .filter(F.col("batch_epoch") < epoch_id)
             )
-            cand = cand.join(seen, bands, "left_anti")
-        # materialize BEFORE the state write: the anti-join must not
-        # re-read a registry this very batch is extending
-        new = cand.localCheckpoint(eager=True)
-        sinks.write_table(new, out_dir, "media_reps", epoch_id=epoch_id)
-        # overwrite THIS epoch's state partition: a retry re-reads
-        # only earlier epochs (filter above), re-derives the same
-        # survivors, and replaces both its sink and state output
-        new.select(*bands).write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"epoch={epoch_id}")
-        )
+            cand = cand.join(seen.select(*bands), bands, "left_anti")
+        # materialized before the sink write: the anti-join must not
+        # re-read the registry this batch is extending
+        return cand.localCheckpoint(eager=True)
 
-    try:
-        stream = (
-            spark.readStream.schema(
-                "doc_id long, width int, height int, payload binary"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(spool, "*.parquet"))
-        )
-        with _stream_shuffle_pin(spark, _spool_partitions(spark, spool)):
-            query = (
-                stream.writeStream.foreachBatch(handle_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _drain_spool(query, spool, "media_dedup", timeout_s)
-        return (
-            sinks.read_table(spark, out_dir, "media_reps")
-            .select(*bands, "rep_id")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(spool, ignore_errors=True)
-        shutil.rmtree(out_dir, ignore_errors=True)
+    return _replay(
+        spark, "media_dedup", [chunks],
+        lambda spool: spark.readStream.schema(
+            "doc_id long, width int, height int, payload binary"
+        ).option("maxFilesPerTrigger", 1).parquet(spool),
+        out_schema, timeout_s, per_batch=per_batch,
+    )

@@ -3249,3 +3249,21 @@ def test_multimodal_dedup_report_negative_doc_ids(spark):
     with pytest.raises(Exception, match=r"doc_id outside"):
         report(too_big)
     spark.catalog.clearCache()
+
+
+def test_passthrough_cols_parses_comma_bearing_types(spark):
+    """A passthrough fragment names its columns as DDL does: commas
+    inside ``decimal(10,2)`` or ``map<int,int>`` are part of the type,
+    not column separators."""
+    from etl_visualization_of_cryptocurrency_trading_data_spark.operators import multimodal
+
+    assert multimodal._passthrough_cols("p decimal(10,2), width int") == ["p", "width"]
+    assert multimodal._passthrough_cols("m map<int,int>, height int") == ["m", "height"]
+    assert multimodal._passthrough_cols("") == []
+    media = multimodal.ppm_table(load_table(spark, SF_SMOKE, "documents")).limit(3)
+    media = media.withColumn("p", F.col("width").cast("decimal(10,2)"))
+    out = multimodal.dhash_ppm(media, passthrough="p decimal(10,2), width int")
+    assert out.columns[-2:] == ["p", "width"]
+    assert {(r.p, r.width) for r in out.collect()} == {
+        (r.p, r.width) for r in media.collect()
+    }

@@ -662,6 +662,56 @@ def test_ohlc_stream_replay_matches_batch(spark):
     assert got == want and len(got) == 3
 
 
+def _tiny_feed(spark):
+    import datetime as dt
+
+    T = dt.datetime(2024, 1, 1)
+    return spark.createDataFrame(
+        [("c1", "x", T, 10.0, 1.0), ("c1", "x", T + dt.timedelta(hours=2), 9.0, 1.0)],
+        "coin_id string, exchange string, timestamp timestamp, price double, volume double",
+    )
+
+
+def test_failed_replay_removes_temp_root_and_restores_conf(spark, monkeypatch):
+    """A replay whose query dies mid-drain must still delete its spool,
+    sink and checkpoint, and put back the conf it pinned for the drain."""
+    import glob
+    import tempfile
+
+    from etl_visualization_of_cryptocurrency_trading_data_spark.streaming import pipeline
+
+    real_ohlc_stream = pipeline.ohlc_stream
+
+    def failing_ohlc_stream(*args, **kwargs):
+        return real_ohlc_stream(*args, **kwargs).withColumn(
+            "open", F.raise_error(F.lit("replay boom")).cast("double")
+        )
+
+    monkeypatch.setattr(pipeline, "ohlc_stream", failing_ohlc_stream)
+    keys = ["spark.sql.shuffle.partitions", "spark.sql.streaming.minBatchesToRetain"]
+    conf_before = {k: spark.conf.get(k, None) for k in keys}
+    pattern = os.path.join(tempfile.gettempdir(), "ohlc_replay_*")
+    dirs_before = set(glob.glob(pattern))
+    with pytest.raises(Exception, match="replay boom"):
+        pipeline.ohlc_stream_replay(spark, _tiny_feed(spark), timeout_s=120)
+    assert set(glob.glob(pattern)) == dirs_before
+    assert {k: spark.conf.get(k, None) for k in keys} == conf_before
+    assert not spark.streams.active
+
+
+def test_replay_leaves_no_temp_views(spark):
+    """A replay's output is a materialized frame, not a view registered
+    in the session catalog, so repeated replays do not grow it."""
+
+    def temp_tables():
+        return [t for t in spark.catalog.listTables() if t.isTemporary]
+
+    before = len(temp_tables())
+    for _ in range(2):
+        assert streaming.pipeline.ohlc_stream_replay(spark, _tiny_feed(spark)).count() == 2
+    assert len(temp_tables()) == before
+
+
 def test_recovery_stream_replay_carries_state_across_kill(spark):
     """The kill-and-resume drain must emit exactly the batch candles —
     on a feed BUILT so the interruption is load-bearing: the split
